@@ -28,7 +28,10 @@ def load_run(path):
             d = json.loads(line)
         except json.JSONDecodeError:
             continue
-        if "queries" in d:
+        # the per-family subtotal line (every key fam_*) is a summary of
+        # the per-query line, not a run of its own
+        q = d.get("queries")
+        if q and not all(k.startswith("fam_") for k in q):
             best = d
     assert best, f"{path}: no bench line with queries"
     return best

@@ -1,8 +1,10 @@
 package graft.gdx
 
-import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, FileInputStream, FileOutputStream, InputStream}
+import java.io.{BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, FileOutputStream, IOException, RandomAccessFile}
+import java.lang.invoke.MethodHandles
+import java.nio.ByteOrder
 import java.nio.charset.StandardCharsets
-import java.util.zip.{Deflater, DeflaterOutputStream, InflaterInputStream}
+import java.util.zip.{DataFormatException, Deflater, DeflaterOutputStream, Inflater}
 
 /** Binary codec for the graft GDX container.
   *
@@ -101,29 +103,6 @@ object GdxCodec {
       v >>>= 7
     }
     out.writeByte(v)
-  }
-
-  private[gdx] def readVarInt(in: DataInputStream): Int = {
-    var shift = 0
-    var result = 0
-    var b = in.readByte()
-    while ((b & 0x80) != 0) {
-      result |= (b & 0x7f) << shift
-      shift += 7
-      // unbounded shift would WRAP (JVM uses the low 5 bits), turning a
-      // corrupt varint into a silently wrong count far from the damage
-      if (shift > 28)
-        throw new java.io.IOException("gdx: malformed varint (>5 bytes)")
-      b = in.readByte()
-    }
-    // at shift==28 only bits 0-2 of the final byte fit in a
-    // non-negative Int (writeVarInt encodes values >= 0 only); bit 3
-    // would flip the sign and bits 4-6 shift out entirely — the same
-    // silently-wrong-count failure the >5-byte guard exists for, just
-    // one byte earlier
-    if (shift == 28 && (b & 0x78) != 0)
-      throw new java.io.IOException("gdx: malformed varint (value overflows Int)")
-    result | ((b & 0x7f) << shift)
   }
 
   // ------------------------------------------------------------ publish
@@ -410,41 +389,34 @@ object GdxCodec {
     * gdxSystemInfo/gdxSymbolInfo/gdxAcronymGetInfo).
     */
   def readHeader(path: String): Header = {
-    val cin = new CountingInputStream(new BufferedInputStream(new FileInputStream(path), 1 << 16))
-    val in = new DataInputStream(cin)
+    val in = new FileCursor(path, 8, () => path)
     try {
-      val magic = new Array[Byte](Magic.length)
-      in.readFully(magic)
+      in.region(0L, in.fileLength, deflate = false)
+      val magic = in.bytes(Magic.length)
       val version =
         if (magic.sameElements(Magic3)) 3
         else if (magic.sameElements(Magic2)) 2
         else if (magic.sameElements(Magic)) 1
         else throw new IllegalArgumentException(s"not a graft GDX file: $path")
       val producer = in.readUTF()
-      val compressed = in.readBoolean()
-      val nUels = readVarInt(in)
-      val uels = Vector.fill(nUels)(in.readUTF())
+      val compressed = in.readByte() != 0
+      val uels = Vector.fill(in.count())(in.readUTF())
       val acronyms =
         if (version >= 2)
-          Vector.fill(readVarInt(in))(GdxAcronym(readVarInt(in), in.readUTF(), in.readUTF()))
+          Vector.fill(in.count())(GdxAcronym(in.readVarInt(), in.readUTF(), in.readUTF()))
         else Vector.empty
-      val nSyms = readVarInt(in)
-      val metas = Vector.fill(nSyms) {
+      val metas = Vector.fill(in.count()) {
         val name = in.readUTF()
         val expl = in.readUTF()
-        val typ = in.readByte().toInt
-        val dim = in.readByte().toInt
-        val userInfo = readVarInt(in)
+        val typ = in.readByte()
+        val dim = in.readByte()
+        if (dim > 20) in.corrupt(s"symbol $name declares dim $dim (GDX allows 0..20)")
+        val userInfo = in.readVarInt()
         val domains = Seq.fill(dim)(in.readUTF())
-        val nRec = readVarInt(in)
-        val dataLen = readVarInt(in)
-        val offset = cin.count
-        var skipped = 0L
-        while (skipped < dataLen) {
-          val s = in.skip(dataLen - skipped)
-          if (s <= 0) throw new EOFException(s"truncated data blob for $name")
-          skipped += s
-        }
+        val nRec = in.readVarInt()
+        val dataLen = in.readVarInt()
+        val offset = in.position
+        in.skip(dataLen, s"data section of $name")
         SymbolMeta(name, typ, dim, expl, userInfo, domains, nRec, offset, dataLen)
       }
       Header(producer, compressed, uels, metas, version, acronyms)
@@ -460,14 +432,15 @@ object GdxCodec {
   }
 
   /** STREAMING decode of one symbol's records: seeks to the section and
-    * inflates/decodes record-by-record — the DSv2 `PartitionReader`
-    * pulls from this, so per-task read memory is O(1 record + UEL
-    * table + block index) regardless of shard size (the eager Vector
-    * form would make task memory proportional to shard records).
+    * decodes block-at-a-time through one [[FileCursor]] — the DSv2
+    * `PartitionReader` pulls from this, so per-task read memory is
+    * O(window + UEL table + block index) regardless of shard size (the
+    * eager Vector form would make task memory proportional to shard
+    * records).
     *
     * `dimAllowed`: admissible UEL indices per dimension (0-based) from
     * pushed label filters. Blocks whose zone map excludes every allowed
-    * index on ANY filtered dimension are SKIPPED WITHOUT INFLATING —
+    * index on ANY filtered dimension are SKIPPED WITHOUT READING them —
     * dim_1 range-exactly (writer paths emit dim_1-clustered records, so
     * a one-label slice decodes ~one block out of records/4096), dims 2+
     * via the v3 per-dim zone map (parquet-stats-style pruning). A
@@ -479,123 +452,158 @@ object GdxCodec {
       dimAllowed: Map[Int, Set[Int]] = Map.empty): GdxRecordStream =
     new GdxRecordStream(path, header.compressed, header.version, meta, dimAllowed)
 
+  /** Longest record a symbol can put on the wire: the firstChanged
+    * byte, a ≤5-byte varint per key, the value bytes, and for sets the
+    * ≤5-byte text varint. Caps a block's decoded size and bounds how far
+    * one record decode reads before its bounds check.
+    */
+  private[gdx] def maxRecordWidth(typ: Int, dim: Int): Int =
+    1 + 5 * dim + valueByteWidth(typ) +
+      (if (typ == SymbolType.Set || typ == SymbolType.Alias) 5 else 0)
+
+  /** Block-at-a-time record decode. A v2/v3 section is its block index
+    * plus block blobs; each matching blob decodes through the stream's
+    * one [[FileCursor]] (one reused Inflater, one refillable byte
+    * window), and a non-matching blob is passed over without a read. A
+    * v1 section (one stream holding text pool and records, no index) is
+    * decoded as a single block through the same cursor.
+    *
+    * The block index is checked at open, and every block as it is
+    * decoded; a violation is an IOException naming file, symbol and
+    * block index:
+    *  - block record counts sum to the symbol's record count, and block
+    *    lengths to the bytes after the index;
+    *  - a block decodes to at most recCount × [[maxRecordWidth]] bytes;
+    *  - a block holds at least recCount records, and nothing after them;
+    *  - a block's first record shares no keys with the block before it.
+    */
   final class GdxRecordStream private[GdxCodec] (path: String, compressed: Boolean,
       version: Int, meta: SymbolMeta, dimAllowed: Map[Int, Set[Int]])
       extends Iterator[GdxRecord] with java.io.Closeable {
-    private val fin = new FileInputStream(path)
-    /** Records this stream actually decoded (observability: block skip). */
-    var decoded: Long = 0L
-    // everything after the open can throw on a truncated/corrupt shard;
+    private val dim = meta.dim
+    private val valueBytes = valueByteWidth(meta.typ)
+    private val hasText = meta.typ == SymbolType.Set || meta.typ == SymbolType.Alias
+    private val width = maxRecordWidth(meta.typ, dim)
+    private val sectionEnd = meta.offset + meta.dataLen
+    // the block being decoded (-1 while reading the section header)
+    private var blockIdx = -1
+    private var blockRecs = 0
+    private val in = new FileCursor(path, width, () =>
+      s"$path, symbol ${meta.name}" + (if (blockIdx < 0) "" else s", block $blockIdx"))
+    private var decodedCount = 0L
+    private var published = 0L
+    private val prev = new Array[Int](dim)
+    // leading keys the next record may share with `prev`: none for a
+    // block's first record, since delta encoding resets per block
+    private var shared = 0
+    private var remaining = 0
+    // a block is open: its end is checked and its count published when
+    // it runs out of records
+    private var open = false
+    private var nextBlock = 0
+    private var nextBlobAt = 0L
     // a constructor that throws leaves the caller no handle to close,
     // so the fd must be released HERE or task retries leak one each
-    private val (base, texts, blocks) =
-      try {
-        var toSkip = meta.offset
-        while (toSkip > 0) {
-          val s = fin.skip(toSkip)
-          if (s <= 0) throw new EOFException(s"cannot seek to ${meta.name}")
-          toSkip -= s
-        }
-        val bounded = new BoundedInputStream(fin, meta.dataLen)
-        if (version >= 2) {
-          // v2/v3: uncompressed section header (text pool + block
-          // index), then independently-deflated block blobs
-          val din = new DataInputStream(new BufferedInputStream(bounded, 1 << 16))
-          val ts = Vector.fill(readVarInt(din))(din.readUTF())
-          val bs = Vector.fill(readVarInt(din)) {
-            val rc = readVarInt(din)
-            if (version >= 3) {
-              // per-dim zone map
-              val mins = new Array[Int](meta.dim)
-              val maxs = new Array[Int](meta.dim)
-              var i = 0
-              while (i < meta.dim) {
-                mins(i) = readVarInt(din); maxs(i) = readVarInt(din); i += 1
-              }
-              BlockMeta(rc, mins.toVector, maxs.toVector, readVarInt(din))
-            } else {
-              // v2 carries dim_1 only; dims 2+ degrade to full range
-              val (lo, hi) = (readVarInt(din), readVarInt(din))
-              val mins = Vector.tabulate(meta.dim)(i => if (i == 0) lo else 0)
-              val maxs = Vector.tabulate(meta.dim)(i =>
-                if (i == 0) hi else Int.MaxValue)
-              BlockMeta(rc, mins, maxs, readVarInt(din))
-            }
-          }
-          (din, ts, bs)
-        } else {
-          // v1: one deflate stream for the whole symbol, pool inside
-          val din = new DataInputStream(new BufferedInputStream(
-            if (compressed) new InflaterInputStream(bounded) else bounded, 1 << 16))
-          val ts = Vector.fill(readVarInt(din))(din.readUTF())
-          (din, ts, Vector(BlockMeta(meta.records,
-            Vector.fill(meta.dim)(0), Vector.fill(meta.dim)(Int.MaxValue), -1)))
-        }
+    private val (texts, blocks) =
+      try if (version >= 2) readIndex() else {
+        in.region(meta.offset, sectionEnd, compressed)
+        val ts = readTexts()
+        in.capRest(meta.records.toLong * width)
+        (ts, Vector.empty[BlockMeta])
       } catch {
-        case e: Throwable => fin.close(); throw e
+        case e: Throwable => in.close(); throw e
       }
-    private val prev = new Array[Int](meta.dim)
-    private var blockIdx = 0
-    private var remaining = 0
-    // v1: the section-level stream IS the record stream; v2: per-block
-    private var in: DataInputStream = if (version >= 2) null else base
-    private var blockBound: BoundedInputStream = null
-    // per-block inflaters are ended EXPLICITLY (closing the
-    // InflaterInputStream would cascade-close the shared base stream);
-    // without end() each block leaks native zlib memory until GC
-    private var blockInflater: java.util.zip.Inflater = null
-    if (version < 2) remaining = meta.records
+    if (version < 2) { blockIdx = 0; blockRecs = meta.records; remaining = meta.records; open = true }
+
+    /** Records this stream actually decoded (observability: block skip). */
+    def decoded: Long = decodedCount
+
+    /** v2/v3 section header: text pool and block index, checked against
+      * the symbol's record count and the section length.
+      */
+    private def readIndex(): (Vector[String], Vector[BlockMeta]) = {
+      in.region(meta.offset, sectionEnd, deflate = false)
+      val ts = readTexts()
+      val bs = Vector.fill(in.count()) {
+        val rc = in.readVarInt()
+        if (version >= 3) {
+          // per-dim zone map
+          val mins = new Array[Int](dim)
+          val maxs = new Array[Int](dim)
+          var i = 0
+          while (i < dim) {
+            mins(i) = in.readVarInt(); maxs(i) = in.readVarInt(); i += 1
+          }
+          BlockMeta(rc, mins.toVector, maxs.toVector, in.readVarInt())
+        } else {
+          // v2 carries dim_1 only; dims 2+ degrade to full range
+          val (lo, hi) = (in.readVarInt(), in.readVarInt())
+          val mins = Vector.tabulate(dim)(i => if (i == 0) lo else 0)
+          val maxs = Vector.tabulate(dim)(i => if (i == 0) hi else Int.MaxValue)
+          BlockMeta(rc, mins, maxs, in.readVarInt())
+        }
+      }
+      nextBlobAt = in.position
+      val recs = bs.iterator.map(_.recCount.toLong).sum
+      if (recs != meta.records)
+        in.corrupt(s"record counts of ${bs.size} blocks sum to $recs, not the symbol's ${meta.records}")
+      val bytes = bs.iterator.map(_.len.toLong).sum
+      if (bytes != sectionEnd - nextBlobAt)
+        in.corrupt(s"block lengths of ${bs.size} blocks sum to $bytes, but ${sectionEnd - nextBlobAt} " +
+          "bytes follow the block index")
+      (ts, bs)
+    }
+
+    /** The set-text pool; every entry is some record's text. */
+    private def readTexts(): Vector[String] = {
+      val n = in.count()
+      if (n > meta.records) in.corrupt(s"text pool of $n entries for ${meta.records} records")
+      Vector.fill(n)(in.readUTF())
+    }
 
     private def blockMatches(b: BlockMeta): Boolean =
       dimAllowed.forall { case (d, allowed) =>
         // small allowed sets (pushed labels) → iterate the set, not the
         // range; a dim past this symbol's arity never filters
-        d >= meta.dim ||
-          allowed.exists(k => k >= b.mins(d) && k <= b.maxs(d))
+        d >= dim || allowed.exists(k => k >= b.mins(d) && k <= b.maxs(d))
       }
 
-    /** Position `in` inside a block with records left; false when the
-      * section is exhausted. v2 only (v1 never calls: remaining covers
-      * the whole symbol).
+    /** Close out a used-up block (its end checked, its count published)
+      * and open the next matching one; false when the section is done.
       */
     private def ensureBlock(): Boolean = {
-      while (remaining == 0 && blockIdx < blocks.length) {
-        if (blockBound != null) {
-          // drain to the block boundary: the inflater may finish without
-          // consuming trailing buffered bytes of its bound
-          var r = blockBound.skip(Long.MaxValue)
-          while (r > 0) r = blockBound.skip(Long.MaxValue)
-          blockBound = null
-        }
-        if (blockInflater != null) { blockInflater.end(); blockInflater = null }
-        val b = blocks(blockIdx)
-        blockIdx += 1
-        if (!blockMatches(b)) {
-          var toSkip = b.len.toLong
-          while (toSkip > 0) {
-            val s = base.skip(toSkip)
-            if (s <= 0) throw new EOFException(s"truncated block in ${meta.name}")
-            toSkip -= s
-          }
+      while (remaining == 0 && (open || nextBlock < blocks.length)) {
+        if (open) {
+          in.expectEnd(s"its $blockRecs records")
+          open = false
+          publish()
         } else {
-          blockBound = new BoundedInputStream(base, b.len)
-          // the buffered layer sits on the UNCOMPRESSED side: varint/
-          // byte reads otherwise call Inflater.inflate once per byte
-          // (r14 probe: a large share of decode time). The compressed
-          // boundary stays exact — blockBound caps the inflater.
-          in = new DataInputStream(new BufferedInputStream(
-            if (compressed) {
-              blockInflater = new java.util.zip.Inflater()
-              new InflaterInputStream(blockBound, blockInflater)
-            } else blockBound, 1 << 15))
-          java.util.Arrays.fill(prev, 0) // delta resets per block
-          remaining = b.recCount
+          val b = blocks(nextBlock)
+          val at = nextBlobAt
+          nextBlock += 1
+          nextBlobAt += b.len
+          if (blockMatches(b)) {
+            blockIdx = nextBlock - 1
+            blockRecs = b.recCount
+            in.region(at, at + b.len, compressed, b.recCount.toLong * width)
+            shared = 0
+            remaining = b.recCount
+            open = true
+          }
         }
       }
       remaining > 0
     }
 
-    override def hasNext: Boolean = remaining > 0 || (version >= 2 && ensureBlock())
+    private def publish(): Unit = {
+      decodedRecords.add(decodedCount - published)
+      published = decodedCount
+    }
+
+    private def truncated(): Nothing =
+      in.corrupt(s"block ends before its $blockRecs records")
+
+    override def hasNext: Boolean = remaining > 0 || ensureBlock()
 
     /** Decode the next record into CALLER-OWNED arrays — the flyweight
       * path the columnar reader rides (r14): no per-record GdxRecord /
@@ -613,29 +621,26 @@ object GdxCodec {
 
     /** Keys-only decode — the LAZY half of the flyweight path (r15):
       * delta keys + set-text index only; the value field(s) stay
-      * unparsed in the stream until the caller decides the record
+      * unparsed in the window until the caller decides the record
       * survives its residual filter ([[readValuesInto]]) or not
-      * ([[skipValues]]). On selective scans most records die on their
-      * keys, and 8–40 bytes of double assembly per corpse is the
-      * dominant avoidable cost once blocks already match the zone map.
-      * Every call MUST be paired with exactly one of the two value
-      * calls before the next record.
+      * ([[skipValues]]). Every call MUST be paired with exactly one of
+      * the two value calls before the next record (or [[hasNext]]).
       */
     def nextKeysInto(keys: Array[Int]): Int = {
-      if (version >= 2 && remaining == 0 && !ensureBlock())
+      if (remaining == 0 && !ensureBlock())
         throw new NoSuchElementException(s"gdx: past end of ${meta.name}")
-      val first = in.readByte().toInt
+      val c = in
+      c.fill(width)
+      val first = c.u8()
+      if (first > shared) c.corrupt(s"record shares $first leading keys, at most $shared can be")
       var i = first
-      while (i < meta.dim) { prev(i) = readVarInt(in); i += 1 }
-      System.arraycopy(prev, 0, keys, 0, meta.dim)
-      var t = 0
-      meta.typ match {
-        case SymbolType.Set | SymbolType.Alias => t = readVarInt(in)
-        case _ => ()
-      }
+      while (i < dim) { prev(i) = c.varInt(); i += 1 }
+      shared = dim
+      System.arraycopy(prev, 0, keys, 0, dim)
+      val t = if (hasText) c.varInt() else 0
+      if (c.p > c.lim) truncated()
       remaining -= 1
-      decoded += 1
-      decodedRecords.increment()
+      decodedCount += 1
       t
     }
 
@@ -647,26 +652,22 @@ object GdxCodec {
       * path cannot desync if the value encoding ever changes.
       */
     def readValuesInto(values: Array[Double]): Unit = {
-      val n = GdxCodec.valueByteWidth(meta.typ) >> 3
+      val n = valueBytes >> 3
       if (n == 0) { if (values.length > 0) values(0) = 0.0 }
       else {
         var f = 0
-        while (f < n) { values(f) = in.readDouble(); f += 1 }
+        while (f < n) { values(f) = in.f64(); f += 1 }
+        if (in.p > in.lim) truncated()
       }
     }
 
     /** Skip the current record's value bytes without assembling them
       * (pairs with [[nextKeysInto]] when the residual filter killed the
-      * record). Width comes from [[GdxCodec.valueByteWidth]] — shared
-      * with [[readValuesInto]] by construction.
+      * record): a cursor bump of [[GdxCodec.valueByteWidth]] bytes.
       */
     def skipValues(): Unit = {
-      var left = GdxCodec.valueByteWidth(meta.typ)
-      while (left > 0) {
-        val s = in.skipBytes(left)
-        if (s <= 0) throw new EOFException(s"truncated record in ${meta.name}")
-        left -= s
-      }
+      in.p += valueBytes
+      if (in.p > in.lim) truncated()
     }
 
     def textAt(t: Int): String = texts(t - 1)
@@ -674,7 +675,7 @@ object GdxCodec {
     private val scratchVals = new Array[Double](5)
 
     override def next(): GdxRecord = {
-      val keys = new Array[Int](meta.dim)
+      val keys = new Array[Int](dim)
       val t = nextInto(keys, scratchVals)
       meta.typ match {
         case SymbolType.Set | SymbolType.Alias =>
@@ -687,33 +688,215 @@ object GdxCodec {
     }
 
     override def close(): Unit = {
-      if (blockInflater != null) { blockInflater.end(); blockInflater = null }
-      base.close()
-      fin.close()
+      publish()
+      in.close()
     }
   }
 
-  /** Caps reads at `limit` bytes so the inflater never crosses into the
-    * next symbol's blob.
+  private val BigEndianLong =
+    MethodHandles.byteArrayViewVarHandle(classOf[Array[Long]], ByteOrder.BIG_ENDIAN)
+
+  /** Buffered reader over one GDX file: ONE refillable byte window and
+    * an Int cursor `p`, fed from a region of the file either raw or
+    * through ONE reused Inflater (reset per region). The catalog read,
+    * section headers and record blocks all decode through it, so read
+    * memory is O(window) whatever the section or block size.
+    *
+    * The window keeps `slack` spare bytes past the filled part `lim`:
+    * after [[fill]]`(n)` with n ≤ slack, a decode may read n bytes with
+    * the unchecked [[u8]]/[[varInt]]/[[f64]] and check `p <= lim` once
+    * after, which keeps per-byte bounds checks out of the record loop
+    * (past the region's end the window reads as zeros).
+    * The `read*` methods check each field. Every failure is an
+    * IOException naming `where()`.
     */
-  private final class BoundedInputStream(in: InputStream, limit: Long) extends InputStream {
-    private var remaining = limit
-    override def read(): Int =
-      if (remaining <= 0) -1
-      else { val r = in.read(); if (r >= 0) remaining -= 1; r }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      if (remaining <= 0) return -1
-      val r = in.read(b, off, math.min(len.toLong, remaining).toInt)
-      if (r > 0) remaining -= r
-      r
+  private[gdx] final class FileCursor(path: String, slack: Int, where: () => String)
+      extends java.io.Closeable {
+    private val file = new RandomAccessFile(path, "r")
+    private var inflater: Inflater = null
+    private var comp: Array[Byte] = null
+    var buf = new Array[Byte]((1 << 16) + slack)
+    var p = 0
+    var lim = 0
+    private var srcPos = 0L
+    private var srcEnd = 0L
+    private var deflated = false
+    // bytes the current region has put into the window, and their cap
+    private var produced = 0L
+    private var cap = Long.MaxValue
+
+    def fileLength: Long = file.length()
+
+    def corrupt(msg: String): Nothing = throw new IOException(s"gdx: $msg (${where()})")
+
+    /** Read file bytes [start, end) next, inflated when `deflate`; the
+      * region may put at most `cap` bytes into the window.
+      */
+    def region(start: Long, end: Long, deflate: Boolean, cap: Long = Long.MaxValue): Unit = {
+      if (!deflate && end - start > cap)
+        corrupt(s"${end - start} stored bytes exceed its cap of $cap bytes")
+      p = 0; lim = 0; srcPos = start; srcEnd = end
+      produced = 0L; this.cap = cap
+      deflated = deflate
+      if (deflate) {
+        if (inflater == null) { inflater = new Inflater(); comp = new Array[Byte](1 << 15) }
+        else inflater.reset()
+      }
     }
-    override def skip(n: Long): Long = {
-      if (remaining <= 0 || n <= 0) return 0
-      val r = in.skip(math.min(n, remaining))
-      if (r > 0) remaining -= r
-      r
+
+    /** Cap what the region may still produce at `n` bytes past `p`. */
+    def capRest(n: Long): Unit = cap = produced - (lim - p) + n
+
+    /** Make `n` bytes available at `p`, or all the region has left. */
+    def fill(n: Int): Unit = if (lim - p < n) {
+      if (n + slack > buf.length) buf = java.util.Arrays.copyOf(buf, n + slack)
+      System.arraycopy(buf, p, buf, 0, lim - p)
+      lim -= p
+      p = 0
+      while (lim < n && refill()) ()
+      // region end: zeros past `lim`, so an unchecked decode of a
+      // truncated record reads zeros and fails its `p <= lim` check
+      if (lim < n) java.util.Arrays.fill(buf, lim, buf.length, 0.toByte)
     }
-    override def close(): Unit = in.close()
+
+    /** Append region bytes at `lim`; false once the region is drained. */
+    private def refill(): Boolean = {
+      val room = buf.length - slack - lim
+      val got =
+        if (!deflated) {
+          val k = math.min(room.toLong, srcEnd - srcPos).toInt
+          readFile(buf, lim, k)
+          k
+        } else {
+          if (inflater.needsInput() && srcPos < srcEnd) {
+            val k = math.min(comp.length.toLong, srcEnd - srcPos).toInt
+            readFile(comp, 0, k)
+            inflater.setInput(comp, 0, k)
+          }
+          val r =
+            try inflater.inflate(buf, lim, room)
+            catch { case e: DataFormatException => corrupt(s"bad deflate data: ${e.getMessage}") }
+          if (r == 0 && !inflater.finished() && !inflater.needsInput())
+            corrupt("deflate stream needs a preset dictionary")
+          r
+        }
+      lim += got
+      produced += got
+      if (produced > cap) corrupt(s"decodes past its cap of $cap bytes")
+      got > 0 || deflated && !inflater.finished() && srcPos < srcEnd
+    }
+
+    private def readFile(dst: Array[Byte], off: Int, len: Int): Unit = {
+      file.seek(srcPos)
+      try file.readFully(dst, off, len)
+      catch { case _: EOFException => corrupt(s"file ends before byte ${srcPos + len}") }
+      srcPos += len
+    }
+
+    /** Fail unless the region is used up: no bytes left and, when
+      * deflated, its stream ended with the region.
+      */
+    def expectEnd(what: String): Unit = {
+      fill(1)
+      if (p < lim || srcPos < srcEnd || deflated && inflater.getRemaining > 0)
+        corrupt(s"bytes left over after $what")
+      if (deflated && !inflater.finished())
+        corrupt(s"deflate stream does not end after $what")
+    }
+
+    // ---- unchecked reads: fill first, compare p with lim after
+
+    def u8(): Int = { val b = buf(p) & 0xff; p += 1; b }
+
+    /** The [[GdxCodec.writeVarInt]] inverse; reads at most 5 bytes. */
+    def varInt(): Int = {
+      var shift = 0
+      var result = 0
+      var b = buf(p); p += 1
+      while ((b & 0x80) != 0) {
+        result |= (b & 0x7f) << shift
+        shift += 7
+        // unbounded shift would WRAP (JVM uses the low 5 bits), turning a
+        // corrupt varint into a silently wrong count far from the damage
+        if (shift > 28) corrupt("malformed varint (>5 bytes)")
+        b = buf(p); p += 1
+      }
+      // at shift==28 only bits 0-2 of the final byte fit in a
+      // non-negative Int (writeVarInt encodes values >= 0 only); bit 3
+      // would flip the sign and bits 4-6 shift out entirely — the same
+      // silently-wrong-count failure the >5-byte guard exists for, just
+      // one byte earlier
+      if (shift == 28 && (b & 0x78) != 0) corrupt("malformed varint (value overflows Int)")
+      result | ((b & 0x7f) << shift)
+    }
+
+    /** Big-endian IEEE double: the inverse of `DataOutputStream.writeDouble`. */
+    def f64(): Double = {
+      val v = java.lang.Double.longBitsToDouble(BigEndianLong.get(buf, p): Long)
+      p += 8
+      v
+    }
+
+    // ---- checked reads (headers)
+
+    private def need(n: Int): Unit = {
+      fill(n)
+      if (lim - p < n) corrupt(s"truncated: ${n - (lim - p)} bytes missing")
+    }
+
+    def bytes(n: Int): Array[Byte] = {
+      need(n)
+      p += n
+      java.util.Arrays.copyOfRange(buf, p - n, p)
+    }
+
+    def readByte(): Int = { need(1); u8() }
+
+    def readVarInt(): Int = {
+      fill(5)
+      val v = varInt()
+      if (p > lim) corrupt("truncated varint")
+      v
+    }
+
+    /** A varint element count, checked against the bytes a raw region
+      * has left (every element takes at least one byte).
+      */
+    def count(): Int = {
+      val n = readVarInt()
+      if (!deflated && n > srcEnd - position) corrupt(s"count $n exceeds the bytes left")
+      n
+    }
+
+    /** A `DataOutput.writeUTF` string. */
+    def readUTF(): String = {
+      need(2)
+      val n = ((buf(p) & 0xff) << 8) | (buf(p + 1) & 0xff)
+      need(2 + n)
+      var i = p + 2
+      while (i < p + 2 + n && buf(i) > 0) i += 1
+      // bytes 1..127 stand for themselves in modified UTF-8
+      val s =
+        if (i == p + 2 + n) new String(buf, p + 2, n, StandardCharsets.US_ASCII)
+        else DataInputStream.readUTF(new DataInputStream(new ByteArrayInputStream(buf, p, 2 + n)))
+      p += 2 + n
+      s
+    }
+
+    /** File offset of the cursor (raw regions). */
+    def position: Long = srcPos - (lim - p)
+
+    /** Pass over `n` bytes of a raw region without reading them. */
+    def skip(n: Long, what: => String): Unit = {
+      if (n > srcEnd - position) corrupt(s"$what runs past the end of the file")
+      if (n <= lim - p) p += n.toInt
+      else { srcPos = position + n; p = 0; lim = 0 }
+    }
+
+    override def close(): Unit = {
+      if (inflater != null) inflater.end()
+      file.close()
+    }
   }
 
   /** Full read (all symbols + acronym table). */
@@ -723,19 +906,5 @@ object GdxCodec {
       h.metas.map(m => GdxSymbol(m.name, m.typ, m.dim, m.explText, m.userInfo,
         m.domains, readSymbolRecords(path, h, m))),
       h.acronyms)
-  }
-
-  private final class CountingInputStream(in: InputStream) extends InputStream {
-    var count: Long = 0
-    override def read(): Int = {
-      val r = in.read(); if (r >= 0) count += 1; r
-    }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      val r = in.read(b, off, len); if (r > 0) count += r; r
-    }
-    override def skip(n: Long): Long = {
-      val r = in.skip(n); count += r; r
-    }
-    override def close(): Unit = in.close()
   }
 }

@@ -420,10 +420,10 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
   // blob entirely (header-only read).
   private val shardCanMatch = dimFilters.valuesIterator.forall(_.nonEmpty)
 
-  // streaming decode: records inflate one at a time — task memory is
-  // O(UEL table + block index), never O(shard records). ALL pushed
-  // per-dim index sets ride into the stream, where the block zone maps
-  // skip non-matching blocks WITHOUT inflating them (dim_1
+  // streaming decode: blocks decode one window at a time — task memory
+  // is O(window + UEL table + block index), never O(shard records). ALL
+  // pushed per-dim index sets ride into the stream, where the block zone
+  // maps skip non-matching blocks WITHOUT reading them (dim_1
   // range-exactly on sorted layouts — a one-label slice decodes ~one
   // block; dims 2+ parquet-stats-style on v3 files); `keep` below
   // still re-checks per record, so the skip is a pure superset pass.
@@ -460,29 +460,15 @@ private[sources] final class GdxSymbolDecode(path: String, symbol: String,
     * into caller-owned arrays (no per-record allocation), returning the
     * 1-based text-pool index (0 = none) or -1 at stream end.
     */
-  // LOCAL-MODE/PROBE-ONLY A/B escape hatch (ColProbe): read from
-  // sys.props at scan construction ON THE EXECUTOR, so a driver-set
-  // property does NOT propagate off local mode — by design. The lazy
-  // path is the production default everywhere; this knob exists only
-  // so a single-JVM probe can measure eager-vs-lazy on one host.
-  private val lazyValues =
-    sys.props.getOrElse("graft.gdx.lazyValues", "true").toBoolean
-
   def nextKeptInto(keys: Array[Int], values: Array[Double]): Int = {
     if (stream == null) return -1
     while (stream.hasNext) {
-      if (lazyValues) {
-        // lazy value materialization (r15): keys decode first; the value
-        // bytes of a record the residual filter kills are SKIPPED, never
-        // assembled — on selective scans whose blocks still match the
-        // zone maps, that is most of the per-corpse decode cost
-        val t = stream.nextKeysInto(keys)
-        if (keepKeys(keys)) { stream.readValuesInto(values); return t }
-        else stream.skipValues()
-      } else {
-        val t = stream.nextInto(keys, values)
-        if (keepKeys(keys)) return t
-      }
+      // lazy value materialization: keys decode first; the value bytes
+      // of a record the residual filter kills are skipped (a cursor
+      // bump), never assembled
+      val t = stream.nextKeysInto(keys)
+      if (keepKeys(keys)) { stream.readValuesInto(values); return t }
+      else stream.skipValues()
     }
     -1
   }

@@ -271,6 +271,205 @@ class GdxAcronymBlockSpec extends AnyFunSuite {
     }
   }
 
+  test("property: block kernel decode equals builder input; decodedRecords counts matching blocks") {
+    // the writer's blocks are consecutive blockSize runs of the sorted
+    // records, so which blocks a filter keeps — and therefore what the
+    // stream must emit and count — follows from the input alone
+    val rnd = new scala.util.Random(2024)
+    val labels = (0 until 12).map(i => s"l$i")
+    for (trial <- 1 to 60) {
+      val dim = rnd.nextInt(5) // 0..4
+      val typ = Seq(SymbolType.Set, SymbolType.Parameter, SymbolType.Variable)(trial % 3)
+      val blockSize = Seq(1, 7, 4096)(rnd.nextInt(3))
+      val compress = rnd.nextBoolean()
+      val seen = scala.collection.mutable.HashSet.empty[Seq[String]]
+      val recs = (0 until rnd.nextInt(300)).flatMap { _ =>
+        val key = Seq.fill(dim)(labels(rnd.nextInt(labels.length)))
+        if (!seen.add(key)) None
+        else Some((key,
+          typ match {
+            case SymbolType.Set => Array.empty[Double]
+            case SymbolType.Parameter =>
+              Array(if (rnd.nextInt(10) == 0) SpecialValues.EPS else rnd.nextGaussian())
+            case _ => Array.fill(5)(rnd.nextGaussian())
+          },
+          if (typ == SymbolType.Set && rnd.nextBoolean()) Some(s"text ${rnd.nextInt(9)}")
+          else None))
+      }
+      val b = new GdxBuilder()
+      b.addSymbol("s", typ, dim, recs)
+      val path = tmp(s"kernel$trial.gdx")
+      GdxCodec.write(b.result(), path, compress, blockSize)
+      val h = GdxCodec.readHeader(path)
+      val want = GdxCodec.sortRecords(b.result().symbol("s").get.records)
+      val filter: Map[Int, Set[Int]] =
+        if (dim == 0 || h.uels.isEmpty || rnd.nextBoolean()) Map.empty
+        else Map(rnd.nextInt(dim) -> Set.fill(1 + rnd.nextInt(2))(rnd.nextInt(h.uels.size)))
+      def blockMatches(blk: Seq[GdxRecord]): Boolean = filter.forall { case (d, allowed) =>
+        allowed.exists(k => k >= blk.map(_.keys(d)).min && k <= blk.map(_.keys(d)).max)
+      }
+      val expected = want.grouped(blockSize).filter(blockMatches).flatten.toVector
+      val ctx = s"trial $trial: typ=$typ dim=$dim n=${want.size} " +
+        s"blockSize=$blockSize compress=$compress filter=$filter"
+
+      val before = GdxCodec.decodedRecords.sum()
+      val s = GdxCodec.openRecordStream(path, h, h.metas.head, filter)
+      val got = try s.toVector finally s.close()
+      assert(got == expected, ctx)
+      assert(GdxCodec.decodedRecords.sum() - before == expected.size, ctx)
+      if (filter.isEmpty) assert(got == want, ctx)
+
+      // closed mid-block: the partial block still counts what it decoded
+      if (expected.size > 1) {
+        val k = 1 + rnd.nextInt(expected.size - 1)
+        val before2 = GdxCodec.decodedRecords.sum()
+        val s2 = GdxCodec.openRecordStream(path, h, h.metas.head, filter)
+        try assert(s2.take(k).toVector == expected.take(k), ctx) finally s2.close()
+        assert(GdxCodec.decodedRecords.sum() - before2 == k, s"$ctx k=$k")
+      }
+    }
+  }
+
+  /** Hand-assembled v3 file: one 1-dim parameter `p` over UELs u0..u9.
+    * Each block is (declared recCount, keys actually in the blob, zero
+    * bytes appended to the blob), so every block-index and block-body
+    * check can be broken on its own; `sectionTail` adds bytes after the
+    * last blob that no block length accounts for, `firstShares` makes
+    * each block's first record claim to share its key with the record
+    * before it, `texts` fills the section's text pool, and `headerDim`
+    * is the dim byte the symbol header declares.
+    */
+  private def corruptFile(name: String, declared: Int, blocks: Seq[(Int, Seq[Int], Int)],
+      compress: Boolean, sectionTail: Int = 0, firstShares: Boolean = false,
+      texts: Seq[String] = Nil, headerDim: Int = 1): String = {
+    import java.io.{ByteArrayOutputStream, DataOutputStream}
+    val blobs = blocks.map { case (_, keys, extra) =>
+      val raw = new ByteArrayOutputStream()
+      val r = new DataOutputStream(raw)
+      keys.zipWithIndex.foreach { case (k, i) =>
+        if (firstShares && i == 0) r.writeByte(1)
+        else { r.writeByte(0); GdxCodec.writeVarInt(r, k) }
+        r.writeDouble(k * 1.5)
+      }
+      r.write(new Array[Byte](extra))
+      if (!compress) raw.toByteArray
+      else {
+        val z = new ByteArrayOutputStream()
+        val dz = new java.util.zip.DeflaterOutputStream(z)
+        dz.write(raw.toByteArray); dz.close()
+        z.toByteArray
+      }
+    }
+    val section = new ByteArrayOutputStream()
+    val sd = new DataOutputStream(section)
+    GdxCodec.writeSectionHeader(sd, texts, blocks.zip(blobs).map { case ((rc, _, _), blob) =>
+      GdxCodec.BlockMeta(rc, Vector(0), Vector(9), blob.length)
+    })
+    blobs.foreach(sd.write)
+    sd.write(new Array[Byte](sectionTail))
+    val out = new ByteArrayOutputStream()
+    val d = new DataOutputStream(out)
+    d.write(GdxCodec.Magic3); d.writeUTF("corrupt"); d.writeBoolean(compress)
+    GdxCodec.writeVarInt(d, 10); (0 until 10).foreach(i => d.writeUTF(s"u$i"))
+    GdxCodec.writeVarInt(d, 0) // no acronyms
+    GdxCodec.writeVarInt(d, 1) // one symbol
+    d.writeUTF("p"); d.writeUTF(""); d.writeByte(SymbolType.Parameter); d.writeByte(headerDim)
+    GdxCodec.writeVarInt(d, 0); d.writeUTF("*")
+    GdxCodec.writeVarInt(d, declared)
+    GdxCodec.writeVarInt(d, section.size)
+    section.writeTo(d)
+    d.flush()
+    val path = tmp(name)
+    Files.write(java.nio.file.Paths.get(path), out.toByteArray)
+    path
+  }
+
+  /** Open and fully decode `path`'s one symbol; the IOException it must
+    * raise, which names the file, the symbol and `where`.
+    */
+  private def rejects(path: String, where: String, what: String): Unit = {
+    val e = intercept[java.io.IOException] {
+      val h = GdxCodec.readHeader(path)
+      val s = GdxCodec.openRecordStream(path, h, h.metas.head)
+      try s.foreach(_ => ()) finally s.close()
+    }
+    val m = e.getMessage
+    assert(m.contains(what) && m.contains(path) && m.contains("symbol p") && m.contains(where), m)
+  }
+
+  test("hardening: a well-formed hand-assembled file decodes (control for the corrupt cases)") {
+    for (compress <- Seq(false, true)) {
+      val path = corruptFile(s"ok-$compress.gdx", 5, Seq((2, Seq(0, 1), 0), (3, Seq(2, 3, 4), 0)),
+        compress)
+      val c = GdxCodec.read(path)
+      assert(c.symbols.head.records.map(_.values(0)) == Vector(0.0, 1.5, 3.0, 4.5, 6.0))
+    }
+  }
+
+  test("hardening: block record counts must sum to the symbol's record count") {
+    for (compress <- Seq(false, true))
+      rejects(corruptFile(s"count-$compress.gdx", 6,
+        Seq((2, Seq(0, 1), 0), (3, Seq(2, 3, 4), 0)), compress), "2 blocks", "record counts")
+  }
+
+  test("hardening: block lengths must sum to the bytes after the block index") {
+    for (compress <- Seq(false, true))
+      rejects(corruptFile(s"len-$compress.gdx", 5,
+        Seq((2, Seq(0, 1), 0), (3, Seq(2, 3, 4), 0)), compress, sectionTail = 3),
+        "2 blocks", "block lengths")
+  }
+
+  test("hardening: a block may not decode past recCount × maxRecordWidth bytes") {
+    // 1-dim parameter: 1 + 5 + 8 = 14 bytes per record at most, so one
+    // declared record plus 64 trailing bytes breaks the cap
+    assert(GdxCodec.maxRecordWidth(SymbolType.Parameter, 1) == 14)
+    for (compress <- Seq(false, true))
+      rejects(corruptFile(s"cap-$compress.gdx", 3,
+        Seq((2, Seq(0, 1), 0), (1, Seq(2), 64)), compress), "block 1", "cap of 14 bytes")
+  }
+
+  test("hardening: a block whose bytes end before recCount records is rejected") {
+    for (compress <- Seq(false, true))
+      rejects(corruptFile(s"short-$compress.gdx", 5,
+        Seq((2, Seq(0, 1), 0), (3, Seq(2, 3), 0)), compress), "block 1", "ends before its 3 records")
+  }
+
+  test("hardening: a block with bytes left over after recCount records is rejected") {
+    for (compress <- Seq(false, true))
+      rejects(corruptFile(s"extra-$compress.gdx", 5,
+        Seq((2, Seq(0, 1), 1), (3, Seq(2, 3, 4), 0)), compress), "block 0",
+        "bytes left over after its 2 records")
+  }
+
+  test("hardening: a header declaring more than 20 dims is rejected") {
+    rejects(corruptFile("dim.gdx", 2, Seq((2, Seq(0, 1), 0)), compress = true, headerDim = 21),
+      "symbol p", "declares dim 21")
+  }
+
+  test("hardening: every proper prefix of a file fails with an IOException") {
+    for (compress <- Seq(false, true)) {
+      val whole = Files.readAllBytes(java.nio.file.Paths.get(corruptFile(s"whole-$compress.gdx", 5,
+        Seq((2, Seq(0, 1), 0), (3, Seq(2, 3, 4), 0)), compress)))
+      val path = tmp(s"prefix-$compress.gdx")
+      for (n <- 0 until whole.length) {
+        Files.write(java.nio.file.Paths.get(path), whole.take(n))
+        intercept[java.io.IOException](GdxCodec.read(path))
+      }
+    }
+  }
+
+  test("hardening: a text pool longer than the symbol's record count is rejected") {
+    rejects(corruptFile("pool.gdx", 2, Seq((2, Seq(0, 1), 0)), compress = true,
+      texts = Seq("a", "b", "c")), "symbol p", "text pool of 3 entries for 2 records")
+  }
+
+  test("hardening: a block's first record cannot share keys across the block boundary") {
+    for (compress <- Seq(false, true))
+      rejects(corruptFile(s"shares-$compress.gdx", 4,
+        Seq((2, Seq(0, 1), 0), (2, Seq(2, 3), 0)), compress, firstShares = true), "block 0",
+        "record shares 1 leading keys, at most 0")
+  }
+
   test("probe: 500k-record symbol at default block size — slice decodes ≤1 block, ~125x faster") {
     // scale-shape evidence beyond the toy sizes: one sorted 500k-record
     // parameter (≈ one production shard), DEFAULT 4096-record blocks

@@ -41,46 +41,6 @@ object ColProbe {
     val rl = timed("row/label     ", vec = false, labelHeavy)
     val cl = timed("col/label     ", vec = true, labelHeavy)
     println(f"[speedup] value ${rv / cv}%.2fx, label ${rl / cl}%.2fx")
-    // r15 lazy-value A/B: a selective pushed filter whose label cycles
-    // through EVERY block (id % 5000 → zone maps cannot skip), so every
-    // record decodes its keys and 1-in-5000 survives — the shape where
-    // skipping the corpses' value bytes (vs assembling doubles) pays
-    def selective(df: org.apache.spark.sql.DataFrame): Unit =
-      df.filter(col("dim_1") === "k0042").agg(sum("value")).head: Unit
-    sys.props("graft.gdx.lazyValues") = "false"
-    val se = timed("sel/eager     ", vec = true, selective)
-    sys.props("graft.gdx.lazyValues") = "true"
-    val sl = timed("sel/lazy      ", vec = true, selective)
-    println(f"[speedup] selective lazy-values (arity 1) ${se / sl}%.2fx")
-    // arity-5 twin (variable symbol, 40 value bytes per record): the
-    // corpse-skip saves 5 double assemblies per rejected record
-    val vdir = java.nio.file.Files.createTempDirectory("colprobe5").toString
-    spark.range(2000000L).select(
-      format_string("k%04d", col("id") % 5000).as("dim_1"),
-      format_string("t%08d", col("id")).as("dim_2"),
-      col("id").cast("double").as("level"),
-      lit(0.0).as("marginal"), lit(0.0).as("lower"),
-      lit(1.0).as("upper"), lit(1.0).as("scale"))
-      .repartition(4)
-      .write.format("gdx").mode("overwrite")
-      .option("symbol", "v").option("symbolType", "variable").save(vdir)
-    def timed5(label: String): Double = {
-      val df = spark.read.format("gdx").option("symbol", "v")
-        .option("vectorized", "true").load(vdir)
-      val times = (1 to 4).map { _ =>
-        val t0 = System.nanoTime()
-        df.filter(col("dim_1") === "k0042").agg(sum("level")).head: Unit
-        (System.nanoTime() - t0) / 1e9
-      }
-      val best = times.min
-      println(f"[$label] best ${2000000 / best / 1e6}%.2f M rec/s ($best%.2f s)")
-      best
-    }
-    sys.props("graft.gdx.lazyValues") = "false"
-    val se5 = timed5("sel5/eager    ")
-    sys.props("graft.gdx.lazyValues") = "true"
-    val sl5 = timed5("sel5/lazy     ")
-    println(f"[speedup] selective lazy-values (arity 5) ${se5 / sl5}%.2fx")
     spark.stop()
   }
 }
